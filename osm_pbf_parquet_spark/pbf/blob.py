@@ -48,7 +48,7 @@ class BlobInfo:
     # peek window didn't cover it). Decode work tracks RAW bytes far
     # better than compressed bytes — dense-node blocks compress ~2x,
     # member-heavy relation blocks ~6x — so the transcode scheduler
-    # weights tasks by it (sources/pbf_source._catalog_rows).
+    # weights tasks by it (sources/pbf_source._task_groups).
     raw_size: int = 0
 
 

@@ -521,6 +521,18 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream.withColumn("event_time", F.timestamp_micros(F.col("ts_us")))
 
 
+def _stream_shuffle_width(parallelism: int) -> int | None:
+    """The replay's ``spark.sql.shuffle.partitions`` from
+    ``SPARK_GRAFT_STREAM_SHUFFLE``: unset → ``min(parallelism, 8)``;
+    ``0`` → None (keep the session width); ``N`` → ``N``."""
+    import os
+
+    env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
+    if env is None:
+        return min(parallelism, 8)
+    return int(env) or None
+
+
 def _run_stream_to_table(spark: SparkSession, df: DataFrame, name: str,
                          mode: str) -> DataFrame:
     """Execute a streaming DataFrame to a memory sink (availableNow) and
@@ -537,21 +549,18 @@ def _run_stream_to_table(spark: SparkSession, df: DataFrame, name: str,
     wall at 32 partitions. This harness executes GATES (availableNow →
     memory sink → oracle comparison); a deployed continuous query never
     runs through it and sizes its own width to throughput.
-    ``SPARK_GRAFT_STREAM_SHUFFLE`` overrides (0 = keep session width);
-    results are width-independent (exact combinable aggregations), which
-    the oracles pin. The session conf is restored after the replay so
-    batch plans never see the bounded width."""
-    import os
-
+    ``SPARK_GRAFT_STREAM_SHUFFLE`` overrides (``N`` = that width, 0 =
+    keep session width; see ``_stream_shuffle_width``); results are
+    width-independent (exact combinable aggregations), which the oracles
+    pin. The session conf is restored after the replay so batch plans
+    never see the bounded width."""
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    par = spark.sparkContext.defaultParallelism
-    width = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "0")) or min(
-        par, 8
-    )
+    width = _stream_shuffle_width(spark.sparkContext.defaultParallelism)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    if width is not None:
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
     try:
         q = (
             df.writeStream.format("memory")

@@ -13,8 +13,10 @@ hive-partitioned zstd parquet **directly from the Arrow batches** with
 pyarrow's C++ writer, yielding only a tiny per-file stats batch. This is
 the reference's own architecture — decode task feeding a parquet sink in
 the same worker (``osm-pbf-parquet/src/pbf.rs:51-98`` →
-``sink.rs:69-117``) — expressed Spark-first: the blob catalog is the
-DataFrame, Spark schedules/distributes/retries the map stage, and the
+``sink.rs:69-117``) — expressed Spark-first: the blob groups ride in the
+task closure over a ``spark.range`` with one row per task
+(``pbf_source.map_blob_groups``), so each task is ONE Python worker
+round-trip; Spark schedules/distributes/retries the map stage, and the
 data plane stays columnar end-to-end (PBF bytes → numpy → Arrow →
 parquet) with zero per-row materialization anywhere.
 
@@ -255,8 +257,8 @@ def transcode_pbf(
     the generic sink's (``tests/test_transcode.py`` pins the equivalence).
     """
     from ..sources.pbf_source import (
-        _catalog_rows,
-        _partitioned_catalog,
+        _task_groups,
+        map_blob_groups,
         normalize_kinds_columns,
     )
 
@@ -286,39 +288,29 @@ def transcode_pbf(
     # this job's losing/partial files, never earlier jobs' committed output
     run_token = f"j{uuid.uuid4().hex[:12]}"
 
-    rows, n_groups = _catalog_rows(
+    groups = _task_groups(
         path, spark.sparkContext.defaultParallelism, blobs_per_task,
         # kind-mixed round-robin runs: byte-equal contiguous chunks left
         # the way/relation span in one 4x-CPU straggler task (see
-        # _catalog_rows) — the transcode's per-task outputs are
+        # _task_groups) — the transcode's per-task outputs are
         # assignment-independent, so the fused sink takes the balanced
         # deal unconditionally
         interleave=True,
     )
-    catalog = _partitioned_catalog(spark, rows, n_groups)
     target_bytes = target_file_mb * 1024 * 1024
     codec = compression
     level = zstd_level if compression == "zstd" else None
 
-    def _transcode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def _transcode(entries: Iterator[tuple]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
 
         from ..sources.pbf_source import parse_blob_entries
 
         ctx = TaskContext.get()
         prefix = f"part-{run_token}-{ctx.partitionId():05d}-{ctx.taskAttemptId()}"
-
-        def entries():
-            for b in batches:
-                yield from zip(
-                    b.column("path").to_pylist(),
-                    b.column("offset").to_pylist(),
-                    b.column("size").to_pylist(),
-                )
-
         tables = (
             pa.Table.from_batches([batch])
-            for batch in parse_blob_entries(entries(), kinds_list, None)
+            for batch in parse_blob_entries(entries, kinds_list, None)
         )
         stats = write_kind_tables(
             tables, out_path, prefix, codec, level, target_bytes,
@@ -334,8 +326,9 @@ def transcode_pbf(
             names=["kind", "file", "rows", "bytes"],
         )
 
-    stat_rows = catalog.mapInArrow(
-        _transcode, schema="kind string, file string, rows long, bytes long"
+    stat_rows = map_blob_groups(
+        spark, groups, _transcode,
+        "kind string, file string, rows long, bytes long",
     ).collect()
 
     committed = {r["file"] for r in stat_rows}

@@ -11,9 +11,10 @@ The idiomatic Spark 4 packaging of the PBF scan (SURVEY §2.1 S1 lists the
 
 gives the same wide OSM DataFrame as ``scan_pbf`` with:
 
-- **partition-per-blob-range**: ``partitions()`` returns contiguous blob
-  groups (same grouping math as ``scan_pbf``), so Spark schedules one
-  task per group and each task issues coalesced byte-range reads;
+- **partition-per-blob-range**: ``partitions()`` returns the non-empty
+  contiguous blob groups of ``pbf_source._task_groups`` (the same groups
+  ``scan_pbf`` runs one task each over), so Spark schedules one task per
+  group and each task issues coalesced byte-range reads;
 - **filter pushdown**: ``pushFilters`` accepts ``type = '...'`` /
   ``type IN (...)`` predicates and forwards them to the parse kernel as
   kind pushdown — a node-only query never decodes way/relation groups
@@ -26,7 +27,7 @@ gives the same wide OSM DataFrame as ``scan_pbf`` with:
   so rows never materialize as Python objects.
 
 Scale notes: ``partitions()`` is a driver-side metadata pass identical to
-the catalog build — ~32 bytes read per ~16MB blob. Each InputPartition
+``scan_pbf``'s — ~32 bytes read per ~16MB blob. Each InputPartition
 carries only (path, offset, size) triples; worker state is one open file
 handle per distinct path per task.
 """
@@ -125,7 +126,7 @@ class OsmPbfReader(DataSourceReader):
                 yield f
 
     def partitions(self) -> list[_BlobRangePartition]:
-        from .pbf_source import _catalog_rows
+        from .pbf_source import _task_groups
 
         if not self.kinds:
             return [_BlobRangePartition([])]
@@ -138,13 +139,8 @@ class OsmPbfReader(DataSourceReader):
                 parallelism = active.sparkContext.defaultParallelism
         except Exception:
             pass
-        rows, n_groups = _catalog_rows(self.paths, parallelism, self.blobs_per_task)
-        if not rows:
-            return [_BlobRangePartition([])]
-        groups: dict[int, list] = {}
-        for p, off, sz, gid in rows:  # gid = size-weighted contiguous chunks
-            groups.setdefault(gid, []).append((p, off, sz))
-        parts = [_BlobRangePartition(groups[g]) for g in sorted(groups)]
+        groups = _task_groups(self.paths, parallelism, self.blobs_per_task)
+        parts = [_BlobRangePartition(grp) for grp in groups if grp]
         return parts or [_BlobRangePartition([])]
 
     def read(self, partition: _BlobRangePartition) -> Iterator:

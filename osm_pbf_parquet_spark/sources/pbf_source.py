@@ -6,20 +6,26 @@ blob.rs:164-449`` readers):
 
 1. **Index pass (driver)** — metadata-only scan of BlobHeaders (S3,
    ``blob.rs:422-448`` parity). Reads ~32 bytes per ~16MB blob, so a
-   planet file indexes in seconds. Produces the blob-range catalog.
-2. **Scan DataFrame** — the catalog becomes a DataFrame of
-   ``(path, offset, size)`` rows; contiguous blobs are grouped so each
+   planet file indexes in seconds. Produces the blob-range index.
+2. **Task groups (driver)** — contiguous blobs are grouped so each
    Spark task issues one coalesced byte-range read (S3-friendly: fewer
-   range GETs; local: sequential I/O).
-3. **Parse kernel (executors)** — ``mapInArrow`` over the catalog: each
-   task seeks to its ranges, decompresses (D1), and runs the vectorized
-   PrimitiveBlock decoder. Spark's scheduler replaces the reference's
-   hand-rolled semaphore/JoinSet admission control (``pbf.rs:66-96``).
+   range GETs; local: sequential I/O). The groups travel inside the task
+   closure; ``spark.range(0, g, 1, numPartitions=g)`` supplies one row
+   per task, and its ``id`` names the group that task reads.
+3. **Parse kernel (executors)** — ``mapInArrow`` over that range: each
+   task seeks to its group's ranges, decompresses (D1), and runs the
+   vectorized PrimitiveBlock decoder. The range is generated in the JVM,
+   so each task makes exactly one Python worker round-trip. Spark's
+   scheduler replaces the reference's hand-rolled semaphore/JoinSet
+   admission control (``pbf.rs:66-96``).
 
 Scale notes (100 TB posture):
 - Parallelism is bounded by blob count (~16MB each → a planet file has
   ~5k blobs; 100TB of PBF → ~6M blobs). ``blobs_per_task`` keeps the task
   count in the tens-of-thousands range rather than millions.
+- Every task's closure carries the whole group list: ~16 bytes per blob
+  once pickled (each path string is stored once), ~2.6 MB per task for
+  a 160k-blob input.
 - Kind/column pushdown reaches the kernel as plan literals — a node-only
   query never decodes way/relation groups (mirrors ``indexed.rs:277-278``).
 - The kernel is stateless per blob; no cross-task shared state exists, so
@@ -111,12 +117,14 @@ def _group_boundaries(sizes: list[int], g: int) -> list[int]:
     return gids
 
 
-def _catalog_rows(path, parallelism: int,
-                  blobs_per_task: int | None,
-                  interleave: bool = False) -> tuple[list[tuple], int]:
-    """One metadata pass per file → (catalog rows, group count). Accepts a
-    single path or a list (a 100 TB corpus is many PBF files; the catalog
-    unions their blob ranges). Contiguous size-weighted chunking: each
+def _task_groups(path, parallelism: int,
+                 blobs_per_task: int | None,
+                 interleave: bool = False) -> list[list[tuple[str, int, int]]]:
+    """One metadata pass per file → the ``(path, offset, size)`` data
+    blobs of each task, one list per task group (a group may be empty;
+    there are always ``_n_groups`` lists, at least one). Accepts a
+    single path or a list (a 100 TB corpus is many PBF files; the groups
+    span their blob ranges). Contiguous size-weighted chunking: each
     group holds adjacent blobs totalling ~equal bytes, so every task
     issues coalesced range reads (files never interleave mid-group) AND
     gets ~equal decode work.
@@ -135,7 +143,7 @@ def _catalog_rows(path, parallelism: int,
     within ~2× across kinds, so raw-weighted groups level the tail;
     same rows, same per-task outputs, different (balanced) assignment
     at the price of non-contiguous reads (still one ~100 KB–MB range
-    read per blob)."""
+    read per blob). Either way a group lists its blobs in file order."""
     entries: list[tuple] = []
     weights: list[int] = []
     for p in _normalize_paths(path):
@@ -169,35 +177,48 @@ def _catalog_rows(path, parallelism: int,
             heapq.heappush(heap, (load + weights[j], gid))
     else:
         gids = _group_boundaries([sz for (_p, _off, sz) in entries], g)
-    rows = [
-        (p, off, sz, gid) for (p, off, sz), gid in zip(entries, gids)
-    ]
-    return rows, g
+    groups: list[list[tuple[str, int, int]]] = [[] for _ in range(g)]
+    for entry, gid in zip(entries, gids):
+        groups[gid].append(entry)
+    return groups
 
 
-def _partitioned_catalog(spark: SparkSession, rows: list[tuple],
-                         n_groups: int) -> DataFrame:
-    """Ship the catalog pre-partitioned along the size-weighted gid
-    boundaries: one group-list per parallelize slice, flattened in place —
-    each task gets its contiguous byte-balanced blob run with NO
-    repartition shuffle and no extra stage (a shuffle roundtrip cost
-    ~1.8s of dead time per scan on a 123 MB input)."""
-    groups: list[list[tuple]] = [[] for _ in range(max(n_groups, 1))]
-    for p, off, sz, gid in rows:
-        groups[gid].append((p, off, sz))
-    rdd = spark.sparkContext.parallelize(
-        groups, max(n_groups, 1)
-    ).flatMap(lambda grp: grp)
-    return spark.createDataFrame(rdd, "path string, offset long, size long")
+def map_blob_groups(spark: SparkSession, groups: list[list[tuple]],
+                    kernel, schema) -> DataFrame:
+    """Run ``kernel`` once per task group: ``kernel`` takes an iterator
+    of ``(path, offset, size)`` triples and yields Arrow batches in
+    ``schema``. Shared by ``scan_pbf`` and the fused transcode sink.
+
+    The groups ride in the closure and ``spark.range`` drives the stage:
+    one JVM-generated row per group, its ``id`` the group index, so task
+    ``i`` reads group ``i`` with no shuffle and no extra stage. A catalog
+    DataFrame built from a Python RDD would cost every task a second
+    Python worker round-trip (the RDD's pipeline, then ``mapInArrow``),
+    and each invocation costs a fixed ~0.23 CPU-s (README, Scale design
+    notes)."""
+    n = len(groups)
+
+    def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        def entries():
+            for batch in batches:
+                for gid in batch.column("id").to_pylist():
+                    yield from groups[gid]
+
+        yield from kernel(entries())
+
+    return spark.range(0, n, 1, numPartitions=n).mapInArrow(_run, schema=schema)
 
 
 def pbf_blob_catalog(spark: SparkSession, path: str, blobs_per_task: int | None = None) -> DataFrame:
     """The blob-range catalog as a DataFrame: (path, offset, size, task_group).
 
     This is the engine's analog of a Parquet footer listing — a tiny
-    metadata DataFrame that scan tasks fan out over.
+    metadata DataFrame for inspecting the task grouping, or for kernels
+    other than the scan's to fan out over.
     """
-    rows, _ = _catalog_rows(path, spark.sparkContext.defaultParallelism, blobs_per_task)
+    groups = _task_groups(path, spark.sparkContext.defaultParallelism, blobs_per_task)
+    rows = [(p, off, sz, gid)
+            for gid, grp in enumerate(groups) for p, off, sz in grp]
     return spark.createDataFrame(rows, "path string, offset long, size long, task_group int")
 
 
@@ -216,10 +237,10 @@ def normalize_kinds_columns(kinds, columns):
 
 
 def parse_blob_entries(entries, kinds: list[str], columns: list[str] | None):
-    """The executor parse kernel, shared by ``scan_pbf``'s ``mapInArrow``
-    closure and the ``osmpbf`` DataSource's ``read()``: iterate
-    (path, offset, size) triples, keeping one open handle per distinct
-    path, and yield non-empty Arrow batches."""
+    """The executor parse kernel, shared by the ``map_blob_groups`` tasks
+    (``scan_pbf``, the fused transcode) and the ``osmpbf`` DataSource's
+    ``read()``: iterate (path, offset, size) triples, keeping one open
+    handle per distinct path, and yield non-empty Arrow batches."""
     from ..pbf.io import open_binary
 
     handles: dict[str, object] = {}
@@ -257,26 +278,15 @@ def scan_pbf(
     kinds_list, columns = normalize_kinds_columns(kinds, columns)
     spark_schema = pruned_schema(columns)
 
-    # group count is known at index time — no Spark job needed for it
-    rows, n_groups = _catalog_rows(
+    groups = _task_groups(
         path, spark.sparkContext.defaultParallelism, blobs_per_task
     )
-    catalog = _partitioned_catalog(spark, rows, n_groups)
-
     columns_list = list(columns) if columns is not None else None
-
-    def _parse(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        def entries():
-            for batch in batches:
-                yield from zip(
-                    batch.column("path").to_pylist(),
-                    batch.column("offset").to_pylist(),
-                    batch.column("size").to_pylist(),
-                )
-
-        yield from parse_blob_entries(entries(), kinds_list, columns_list)
-
-    return catalog.mapInArrow(_parse, schema=spark_schema)
+    return map_blob_groups(
+        spark, groups,
+        lambda entries: parse_blob_entries(entries, kinds_list, columns_list),
+        spark_schema,
+    )
 
 
 def estimate_rows_per_file(sample_df: DataFrame, target_mb: int = 500, sample_rows: int = 50_000) -> int:

@@ -225,7 +225,7 @@ def incremental_transcode(
     This is the honest Spark shape for a non-native streaming source:
     file-listing + append, the same contract as ``foreachBatch``. The
     whole batch runs as ONE fused parse+write job (the multi-file
-    catalog parallelizes across files; ``sinks.native_sink`` — run-token
+    task groups span every file; ``sinks.native_sink`` — run-token
     scoped commit, so append jobs can never disturb earlier ticks'
     files), and the processed-set advances only after that job commits.
     A mid-job failure leaves no committed files of this tick and the

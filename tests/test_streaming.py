@@ -100,6 +100,19 @@ def test_incremental_transcode(spark, tmp_path):
     assert spark.read.parquet(out).count() == 555 + 333
 
 
+def test_stream_shuffle_width_env_states(monkeypatch):
+    from osm_pbf_parquet_spark.plans.analytic_queries import _stream_shuffle_width
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE", raising=False)
+    assert _stream_shuffle_width(32) == 8
+    assert _stream_shuffle_width(4) == 4
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "0")
+    assert _stream_shuffle_width(32) is None  # keep the session width
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE", "24")
+    assert _stream_shuffle_width(32) == 24
+    assert _stream_shuffle_width(4) == 24
+
+
 def test_replication_cursor_fields():
     cur = ops.replication_cursor("/root/reference/osmpbf/tests/test.osm.pbf")
     assert set(cur) == {"timestamp", "sequence", "base_url"}
