@@ -545,17 +545,27 @@ def _pigeonhole_guard(bands: int, max_distance: int) -> None:
         )
 
 
-def _swar_bucket_pairs(k, h, max_distance: int, out_a, out_b, out_d):
+# Cells (rows × bucket_rows) of one XOR block in _swar_bucket_pairs: caps
+# the kernel's scratch at ~block_cells × 8 B per array on a hot bucket.
+_SWAR_BLOCK_CELLS = 8_000_000
+# Pairs per frame _bucket_pairs_map_kernel accumulates before it yields:
+# checked after every block, so one frame holds at most this many pairs
+# plus one block's, even when a single degenerate bucket holds ~n²/2.
+_MAX_FRAME_PAIRS = 4_000_000
+
+
+def _swar_bucket_pairs(k, h, max_distance: int):
     """ONE bucket's all-pairs Hamming enumeration, vectorized: XOR the
     bucket's fingerprints as a blocked outer product in numpy and
     popcount with the SWAR folds (uint64, wrap-around multiply is
     exactly the mod-2⁶⁴ SWAR needs). ``k`` must be sorted ascending so
-    the row<col emission yields doc_a < doc_b. Appends survivor arrays
-    into the caller's accumulators. Blocked so peak memory is ~block ×
-    bucket_rows × 8 B even on a degenerate hot bucket."""
+    the row<col emission yields doc_a < doc_b. Yields one
+    ``(doc_a, doc_b, hamming)`` array triple per block that has
+    survivors. Blocked so peak memory is ~block × bucket_rows × 8 B
+    even on a degenerate hot bucket."""
     n = len(k)
     cols = np.arange(n, dtype=np.int64)
-    block = max(1, min(1024, 8_000_000 // n))
+    block = max(1, min(1024, _SWAR_BLOCK_CELLS // n))
     for i0 in range(0, n - 1, block):
         i1 = min(i0 + block, n)
         x = h[i0:i1, None] ^ h[None, :]
@@ -568,9 +578,7 @@ def _swar_bucket_pairs(k, h, max_distance: int, out_a, out_b, out_d):
             cols[None, :] > np.arange(i0, i1)[:, None])
         r, c = np.nonzero(hit)
         if r.size:
-            out_a.append(k[r + i0])
-            out_b.append(k[c])
-            out_d.append(d[r, c].astype(np.int32))
+            yield k[r + i0], k[c], d[r, c].astype(np.int32)
 
 
 _PAIRS_EMPTY = {
@@ -613,17 +621,19 @@ def _bucket_pairs_map_kernel(max_distance: int):
         for s, e in zip(starts, ends):
             if e - s < 2:
                 continue
-            _swar_bucket_pairs(k[s:e], h[s:e], max_distance,
-                               out_a, out_b, out_d)
-            emitted = sum(a.size for a in out_a)
-            if emitted > 4_000_000:  # bound the output frame on
-                yield pd.DataFrame({  # degenerate all-equal corpora
-                    "doc_a": np.concatenate(out_a),
-                    "doc_b": np.concatenate(out_b),
-                    "hamming": np.concatenate(out_d),
-                })
-                out_a, out_b, out_d = [], [], []
-                emitted = 0
+            for a, b, d in _swar_bucket_pairs(k[s:e], h[s:e], max_distance):
+                out_a.append(a)
+                out_b.append(b)
+                out_d.append(d)
+                emitted += a.size
+                if emitted > _MAX_FRAME_PAIRS:
+                    yield pd.DataFrame({
+                        "doc_a": np.concatenate(out_a),
+                        "doc_b": np.concatenate(out_b),
+                        "hamming": np.concatenate(out_d),
+                    })
+                    out_a, out_b, out_d = [], [], []
+                    emitted = 0
         yield (
             pd.DataFrame({
                 "doc_a": np.concatenate(out_a),

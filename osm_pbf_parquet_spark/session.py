@@ -41,10 +41,9 @@ def get_spark(app_name: str = "osm_pbf_parquet_spark", **extra_confs) -> SparkSe
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         # SPARK_GRAFT_DRIVER_JAVA_OPTS: extra JVM flags for the driver
-        # (local mode: the one JVM). Used by the soak A/B harness to pin
-        # heap sizing (-Xms=-Xmx) — r12: the dedup soak leg's 2-4x
-        # CPU-second spread across fresh JVMs on IDENTICAL plans tracks
-        # GC pacing under lazy heap growth, not the engine.
+        # (local mode: the one JVM), e.g. -Xms equal to the heap size so
+        # GC pacing under lazy heap growth does not swing CPU-seconds
+        # between fresh JVMs running identical plans.
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", ""),

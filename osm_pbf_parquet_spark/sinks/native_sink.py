@@ -216,19 +216,18 @@ def write_kind_tables(tables: Iterator, out_path: str, prefix: str,
 
 
 def _finalize_output(out_path: str, committed: set[str],
-                     run_token: str | None = None) -> None:
+                     run_token: str) -> None:
     """Job-commit step: delete THIS JOB's partition-dir files that were
     NOT committed by a winning attempt (``.inprogress`` partials from
     failed tasks, complete files from losing speculative attempts), then
     write ``_SUCCESS``. ``run_token`` scopes the cleanup to files this
-    job wrote — append-mode jobs must never touch earlier jobs' output
-    (None = legacy unscoped behavior, only safe for overwrite mode)."""
+    job wrote — append-mode jobs must never touch earlier jobs' output."""
     for kind_dir in os.listdir(out_path):
         full = os.path.join(out_path, kind_dir)
         if not os.path.isdir(full):
             continue
         for fname in os.listdir(full):
-            if run_token is not None and run_token not in fname:
+            if run_token not in fname:
                 continue  # another job's file — not ours to judge
             fpath = os.path.join(full, fname)
             if fname.endswith(".inprogress") or fpath not in committed:

@@ -7,12 +7,11 @@ import pytest
 
 @pytest.fixture(scope="session")
 def spark():
-    # r13 suite wall: pin and pre-touch a right-sized heap for the test
-    # session. The default 48g lazily-grown heap bills first-touch page
-    # faults to tasks for the whole suite (the SOAK_AB_r12 pathology);
-    # a pinned pre-touched 12g measured ~8% faster on a mid-size test
-    # file and removes the growth-driven variance. setdefault so an
-    # explicit caller posture (soak/anchor harnesses) wins.
+    # Pin and pre-touch a right-sized heap for the test session. The
+    # default 48g lazily-grown heap bills first-touch page faults to
+    # tasks for the whole suite; a pinned pre-touched 12g measured ~8%
+    # faster on a mid-size test file and removes the growth-driven
+    # variance. setdefault so a caller's environment wins.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "12g")
     os.environ.setdefault(
         "SPARK_GRAFT_DRIVER_JAVA_OPTS", "-Xms12g -XX:+AlwaysPreTouch"

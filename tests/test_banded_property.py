@@ -8,9 +8,12 @@ single-bit neighbors, bit patterns clustered in one band)."""
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings, strategies as st
 
+from osm_pbf_parquet_spark.operators import dedup
 from osm_pbf_parquet_spark.operators.dedup import (
     _pigeonhole_guard,
     banded_hamming_pairs,
@@ -61,3 +64,34 @@ def test_pigeonhole_guard_rejects_unsound_geometry():
     with pytest.raises(ValueError):
         _pigeonhole_guard(bands=4, max_distance=4)
     _pigeonhole_guard(bands=4, max_distance=3)  # boundary is sound
+
+
+def test_hot_bucket_frames_are_bounded(monkeypatch):
+    """One degenerate bucket (every fingerprint equal, so every pair
+    survives) is split into frames while it is enumerated: each frame
+    holds at most the frame bound plus one block's pairs, and the
+    frames concatenate to exactly the unbounded output."""
+    n = 300
+    bucket = pd.DataFrame({
+        "_band": np.zeros(n, np.int64),
+        "_bits": np.full(n, 5, np.int64),
+        "_k": np.arange(n, 0, -1, dtype=np.int64),
+        "_h": np.full(n, -7, np.int64),
+    })
+
+    def run():
+        return list(dedup._bucket_pairs_map_kernel(1)(iter([bucket])))
+
+    unbounded = run()
+    assert len(unbounded) == 1 and len(unbounded[0]) == n * (n - 1) // 2
+
+    block_rows = 10
+    bound = 500
+    monkeypatch.setattr(dedup, "_SWAR_BLOCK_CELLS", block_rows * n)
+    monkeypatch.setattr(dedup, "_MAX_FRAME_PAIRS", bound)
+    frames = run()
+    assert len(frames) > 1
+    assert max(len(f) for f in frames) <= bound + block_rows * n
+    pd.testing.assert_frame_equal(
+        pd.concat(frames, ignore_index=True), unbounded[0]
+    )

@@ -235,19 +235,21 @@ def test_fused_transcode_file_rolling(spark, tmp_path, synthetic_pbf):
 def test_fused_sink_finalize_commit_protocol(tmp_path):
     """The driver finalize keeps exactly the committed files: stragglers
     from failed attempts (.inprogress) and losing speculative attempts
-    (complete but unreported) are deleted; _SUCCESS lands last."""
+    (complete but unreported) are deleted; files carrying another job's
+    token are left alone (append mode); _SUCCESS lands last."""
     from osm_pbf_parquet_spark.sinks.native_sink import _finalize_output
 
     out = tmp_path / "out"
     nd = out / "type=node"
     nd.mkdir(parents=True)
-    keep = nd / "part-00000-1-000.zstd.parquet"
-    loser = nd / "part-00000-7-000.zstd.parquet"  # speculative duplicate
-    partial = nd / "part-00001-2-000.zstd.parquet.inprogress"
-    for p in (keep, loser, partial):
+    keep = nd / "part-jthis-00000-1-000.zstd.parquet"
+    loser = nd / "part-jthis-00000-7-000.zstd.parquet"  # speculative duplicate
+    partial = nd / "part-jthis-00001-2-000.zstd.parquet.inprogress"
+    earlier = nd / "part-jother-00000-3-000.zstd.parquet"  # earlier append
+    for p in (keep, loser, partial, earlier):
         p.write_bytes(b"x")
-    _finalize_output(str(out), {str(keep)})
-    assert keep.exists()
+    _finalize_output(str(out), {str(keep)}, "jthis")
+    assert keep.exists() and earlier.exists()
     assert not loser.exists() and not partial.exists()
     assert (out / "_SUCCESS").exists()
 
